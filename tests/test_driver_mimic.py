@@ -115,6 +115,10 @@ QUERIES = [
     "audio_resample_features",
     "audio_vad_features",
     "audio_mfcc_features",
+    # the three original real-codec gates (image, AVI video, WAV audio)
+    "image_decode_features",
+    "video_decode_features",
+    "audio_decode_features",
 ]
 
 

@@ -6296,7 +6296,9 @@ def test_g72x_inlined_loop_matches_spec_blocks():
     (g72x_encode/g72x_decode) is bit-identical to the spec-block
     composition (_g72x_encode_ref/_g72x_decode_ref) on every law, for
     codes, reconstruction and decode — including transition/tone paths
-    driven by full-range noise and arbitrary code streams."""
+    driven by full-range noise and arbitrary code streams, and long
+    constant streams that drive a zero-predictor tap to its leak
+    equilibrium (an = 8192, or 16384 for g723_40)."""
     import numpy as np
 
     from input_data_pipeline_spark.operators import multimodal as mm
@@ -6306,6 +6308,8 @@ def test_g72x_inlined_loop_matches_spec_blocks():
         np.zeros(300, np.int16),
         np.full(300, 32767, np.int16),
         np.full(300, -32768, np.int16),
+        np.full(20000, 32767, np.int16),
+        np.full(20000, -32768, np.int16),
         (np.sin(np.arange(1500) * 0.07) * 20000).astype(np.int16),
         rng.integers(-32768, 32768, 2000).astype(np.int16),
         rng.integers(-50, 50, 800).astype(np.int16),
@@ -6328,8 +6332,14 @@ def test_g72x_inlined_loop_matches_spec_blocks():
         assert np.array_equal(
             mm._g72x_decode_ref(allc, law), mm.g72x_decode(allc, law)
         )
+        # max-positive and max-negative code, held for 20000 samples
+        for code in ((1 << (bits - 1)) - 1, 1 << (bits - 1)):
+            const = np.full(20000, code, np.uint8)
+            assert np.array_equal(
+                mm._g72x_decode_ref(const, law), mm.g72x_decode(const, law)
+            ), (law, code)
     # the packed FMULT table agrees with the inline decomposition
-    for anmag in (0, 1, 31, 32, 63, 64, 4095, 8191):
+    for anmag in (0, 1, 31, 32, 63, 64, 4095, 8191, 8192, 16383, 16384):
         anexp = anmag.bit_length() - 6
         anmant = (
             32 if anmag == 0

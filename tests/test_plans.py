@@ -596,69 +596,84 @@ def test_joined_gate_plans_have_no_trailing_range_sort(spark, sf_dir):
         )
 
 
+# Every decode gate that returns ``_doc_gate``'s frame as is.
+_DOC_GATES = (
+    "image_decode_features", "video_decode_features",
+    "audio_decode_features", "g711_decode_features",
+    "audio_resample_features", "audio_vad_features", "audio_mfcc_features",
+    "mp3_probe_features", "flac_decode_features", "mp3_decode_features",
+    "mp3_stereo_decode_features", "mp3_shortblock_decode_features",
+    "mp3_pcm_decode_features", "mp3_rate_profiles_decode_features",
+    "mp3_stereo_matrix_decode_features",
+    "mp3_huffman_tables_decode_features", "mpeg1_layer1_decode_features",
+    "mp3_lsf_decode_features", "mpeg1_layer2_decode_features",
+    "adts_probe_features", "ogg_probe_features", "vorbis_decode_features",
+    "wav_ext_decode_features", "netpbm_tga_decode_features",
+    "jpeg_lossless_decode_features", "mp4_pcm_variants_features",
+    "mp4_audio_extract_features", "mp3_container_routing_features",
+    "jpeg_precision12_features", "jpeg_in_tiff_decode_features",
+    "jpeg_hierarchical_features", "tiff_decode_features",
+    "tiff_g4_decode_features", "au_decode_features",
+    "au_adpcm_decode_features", "ms_adpcm_decode_features",
+    "aiff_decode_features", "caf_decode_features", "y4m_decode_features",
+    "audio_tags_features", "jpeg_decode_features",
+    "avi_audio_extract_features",
+)
+
+# The gates whose final (executed) plan is also checked.
+_EXECUTED_DOC_GATES = (
+    "jpeg_decode_features", "mp3_rate_profiles_decode_features",
+    "avi_audio_extract_features", "ms_adpcm_decode_features",
+    "aiff_decode_features", "netpbm_tga_decode_features",
+    "ogg_probe_features", "wav_ext_decode_features", "caf_decode_features",
+    "y4m_decode_features", "audio_tags_features",
+    "mp4_pcm_variants_features",
+    # round 17: the Vorbis/hierarchical-JPEG gates and the audio DSP trio
+    # are map-only too
+    "vorbis_decode_features", "jpeg_hierarchical_features",
+    "audio_resample_features", "audio_vad_features", "audio_mfcc_features",
+)
+
+
+def _assert_narrow(name, plan):
+    assert "Sort" not in plan, (name, plan[:800])
+    assert "Join" not in plan, (name, plan[:800])
+    for e in re.findall(r"Exchange (\w+)", plan):
+        assert e.startswith(("RoundRobin", "SinglePartition")), (name, e)
+
+
 def test_decode_gate_plans_have_no_trailing_sort(spark, sf_dir):
     """Round 16 (r15 verdict task 6): the map-only decode gates dropped
     their trailing orderBy — the driver comparator is order-insensitive
-    — so their executed plans must stay narrow end-to-end: NO Sort, no
-    Join, and no exchange beyond the explicit core fan-out repartition
-    (RoundRobin). A reintroduced output sort would add a
-    rangepartitioning Exchange + Sort after the InPandas node and fail
-    here."""
-    from input_data_pipeline_spark.operators.multimodal import (
-        aiff_decode_features,
-        avi_audio_extract_features,
-        jpeg_decode_features,
-        mp3_rate_profiles_decode_features,
-        ms_adpcm_decode_features,
-        audio_tags_features,
-        caf_decode_features,
-        mp4_pcm_variants_features,
-        netpbm_tga_decode_features,
-        y4m_decode_features,
-        ogg_probe_features,
-        wav_ext_decode_features,
-        vorbis_decode_features,
-        jpeg_hierarchical_features,
-        audio_resample_features,
-        audio_vad_features,
-        audio_mfcc_features,
-    )
+    — so their plans must stay narrow end-to-end: NO Sort, no Join, and
+    no exchange beyond the core fan-out repartition (RoundRobin). A
+    reintroduced output sort would add a rangepartitioning Exchange +
+    Sort after the InPandas node and fail here.
+
+    Every gate is checked on its initial AQE plan, which runs no job:
+    exactly one MapInPandas node fed by exactly one RoundRobinPartitioning
+    exchange, the shape ``_doc_gate`` builds. A subset also runs, and
+    its final plan is checked."""
+    from input_data_pipeline_spark.operators import multimodal as mm
     from input_data_pipeline_spark.operators.textstats import (
         pii_redaction_stats,
     )
 
-    for q in (
-        jpeg_decode_features,
-        mp3_rate_profiles_decode_features,
-        avi_audio_extract_features,
-        pii_redaction_stats,
-        ms_adpcm_decode_features,
-        aiff_decode_features,
-        netpbm_tga_decode_features,
-        ogg_probe_features,
-        wav_ext_decode_features,
-        netpbm_tga_decode_features,
-        caf_decode_features,
-        y4m_decode_features,
-        audio_tags_features,
-        mp4_pcm_variants_features,
-        # r17 final session: the Vorbis/hierarchical-JPEG gates and
-        # the audio DSP trio are map-only too
-        vorbis_decode_features,
-        jpeg_hierarchical_features,
-        audio_resample_features,
-        audio_vad_features,
-        audio_mfcc_features,
-    ):
-        plan = _executed_plan(q(spark, sf_dir))
-        if q.__name__ != "pii_redaction_stats":  # pii is fully JVM-side
-            assert "InPandas" in plan, (q.__name__, plan[:400])
-        assert "Sort" not in plan, (q.__name__, plan[:800])
-        assert "Join" not in plan, (q.__name__, plan[:800])
-        for e in re.findall(r"Exchange (\w+)", plan):
-            assert e.startswith(("RoundRobin", "SinglePartition")), (
-                q.__name__, e,
-            )
+    assert set(_EXECUTED_DOC_GATES) <= set(_DOC_GATES)
+    for name in _DOC_GATES:
+        df = getattr(mm, name)(spark, sf_dir)
+        initial = df._jdf.queryExecution().executedPlan().toString()
+        assert initial.count("MapInPandas") == 1, (name, initial[:800])
+        assert initial.count("RoundRobinPartitioning") == 1, (
+            name, initial[:800],
+        )
+        _assert_narrow(name, initial)
+        if name in _EXECUTED_DOC_GATES:
+            _assert_narrow(name, _executed_plan(df))
+    # pii_redaction_stats is fully JVM-side: only its narrowness applies
+    _assert_narrow("pii_redaction_stats", _executed_plan(
+        pii_redaction_stats(spark, sf_dir)
+    ))
 
 
 def test_single_scan_restructures_share_one_corpus_pass(spark, sf_dir):
